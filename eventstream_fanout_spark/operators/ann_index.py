@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..streaming.compaction import write_generation
 from .similarity import ivf_assign, ivf_centroids
 
 PQ_SUBS = 8     # subspaces
@@ -246,13 +247,11 @@ def build_pq_index(
     if corpus is None:
         corpus = emb.where(F.col("vec_id") != 0)
     corpus = corpus.select("vec_id", "embedding")
-    (
-        encode_pq_codes(corpus, codebook, centroids)
-        .withColumn("batch_id", F.lit(FROZEN_BATCH_ID))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "list_id")
-        .parquet(f"{index_path}/codes")
+    write_generation(
+        encode_pq_codes(corpus, codebook, centroids),
+        f"{index_path}/codes",
+        FROZEN_BATCH_ID,
+        "list_id",
     )
 
 

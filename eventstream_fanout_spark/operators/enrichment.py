@@ -103,11 +103,14 @@ def warehouse_typed(df: DataFrame) -> DataFrame:
     sink boundary so the parquet files carry the declared type —
     closing the last typed-parity delta with the reference's sink
     schema.  NULL passes through (Nullable); the value is already
-    half-up-rounded to 2 places, so the cast is exact."""
+    half-up-rounded to 2 places, so the cast is exact.  A value the
+    type cannot hold (|pct| >= 1000) lands as NULL: a plain cast
+    raises NUMERIC_VALUE_OUT_OF_RANGE under ANSI mode, which would
+    fail the micro-batch and stop the stream on one outlier event."""
     if "engagement_pct" not in df.columns:
         return df
     return df.withColumn(
-        "engagement_pct", F.col("engagement_pct").cast("decimal(5,2)")
+        "engagement_pct", F.col("engagement_pct").try_cast("decimal(5,2)")
     )
 
 

@@ -92,6 +92,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.core import dsum
+from ..streaming.compaction import write_generation
 from ..functions.hashing import tokens
 
 BM25_K1 = 1.2
@@ -152,13 +153,7 @@ def build_text_index(
     # Before, each of the four writes re-ran the explode→tf→dl tree
     # over the corpus.
     postings, _dl = doc_postings(docs)
-    (
-        postings.withColumn("batch_id", F.lit(FROZEN_BATCH_ID))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{index_path}/postings")
-    )
+    write_generation(postings, f"{index_path}/postings", FROZEN_BATCH_ID)
     # Schema-specified read-back (r15 — the SPARK-23271 corner the
     # vector-dedup sink fixed first): an all-empty-text corpus commits
     # no data file under dynamic overwrite, so inference over the bare
@@ -183,13 +178,7 @@ def build_text_index(
     stats_obs = Observation()
     stats = batch_stats(dl).observe(stats_obs, F.sum("n_docs").alias("n"))
     for rel, name in ((dl, "doclens"), (vocab, "vocab"), (stats, "stats")):
-        (
-            rel.withColumn("batch_id", F.lit(FROZEN_BATCH_ID))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{index_path}/{name}")
-        )
+        write_generation(rel, f"{index_path}/{name}", FROZEN_BATCH_ID)
     # Bloom LAST, from the just-written artifacts instead of the live
     # tokenization subtree (ADVICE r11: the old bloom-first call
     # re-computed the explode once for the count and once for the
@@ -1262,11 +1251,6 @@ def write_idbloom(
     pass over ``ids`` on the hot write path (ADVICE r11).  An
     over-estimate is safe (larger m → lower false-positive rate)."""
     n = int(n_docs) if n_docs is not None else ids.count()
-    (
-        idbloom_rows(ids, idbloom_m(n))
-        .withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{index_path}/idbloom")
+    write_generation(
+        idbloom_rows(ids, idbloom_m(n)), f"{index_path}/idbloom", batch_id
     )

@@ -51,6 +51,19 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
+    # Generated-code cache sized for streaming: one curated-ingest
+    # trigger (dedup, then index) needs ~110-130 classes (the cache
+    # keys on the class loader too, so driver and task threads each
+    # hold a copy), more than the default 100, so each trigger evicted
+    # what the next one needed and recompiled ~0.9 s of Janino work.
+    # Static conf: effective only when get_spark creates the JVM.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    # Keep the codegen stage id out of the generated class name.  The
+    # id is a per-query counter, and adaptive execution numbers stages
+    # in the order they are created, which can differ from trigger to
+    # trigger; with the id in the name, the same stage compiled again
+    # under a new name.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 
@@ -89,10 +102,17 @@ def get_spark(
 
 def apply_engine_conf(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine conf to an externally-built session
-    (the driver hands us one in ``__spark_entry__``)."""
+    (``__spark_entry__`` receives one from its caller).  Static confs,
+    which a running session cannot change, are skipped: such a session
+    keeps its own sizing, including its generated-code cache size
+    (``spark.sql.codegen.cache.maxEntries``).  ``isModifiable`` alone
+    cannot tell them apart: it is also False for keys Spark reads by
+    prefix without registering them (the RocksDB changelog switch),
+    which a running session does honor.  Any other failure to set a
+    conf raises."""
+    is_static = spark._jvm.org.apache.spark.sql.internal.SQLConf.isStaticConfigKey
     for k, v in ENGINE_CONF.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on a running session - keep going
+        if not spark.conf.isModifiable(k) and is_static(k):
+            continue
+        spark.conf.set(k, v)
     return spark

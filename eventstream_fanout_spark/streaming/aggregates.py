@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .compaction import write_generation
+
 DEFAULT_WATERMARK = "10 minutes"
 
 
@@ -115,14 +117,8 @@ def rollup_sink(path: str, *keys: str, ts_col: str = "ts", width: str = "1 hour"
                 "n_events",
                 "sum_value",
             )
-            .withColumn("batch_id", F.lit(int(batch_id)))
         )
-        (
-            partial.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
+        write_generation(partial, path, batch_id)
 
     return write
 

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.ann_index import encode_pq_codes
+from .compaction import write_generation
 
 
 def _read_artifact_or_raise(spark: SparkSession, path: str, what: str):
@@ -137,15 +138,13 @@ def streaming_ann_index_sink(index_path: str):
                     "filtered probe; carry the attr columns on the "
                     "ingest stream (or drop the attrs store)"
                 )
-        (
+        write_generation(
             encode_pq_codes(
                 batch_df.select("vec_id", "embedding"), codebook, centroids
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "list_id")
-            .parquet(f"{index_path}/codes")
+            ),
+            f"{index_path}/codes",
+            batch_id,
+            "list_id",
         )
         if attrs_store is not None:
             # the just-written codes partition IS the batch's
@@ -156,15 +155,11 @@ def streaming_ann_index_sink(index_path: str):
                 .where(F.col("batch_id") == int(batch_id))
                 .select("vec_id", "list_id")
             )
-            (
-                assigned.join(
-                    batch_df.select("vec_id", *acols), "vec_id"
-                )
-                .withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id", "list_id")
-                .parquet(f"{index_path}/attrs")
+            write_generation(
+                assigned.join(batch_df.select("vec_id", *acols), "vec_id"),
+                f"{index_path}/attrs",
+                batch_id,
+                "list_id",
             )
 
     return process
@@ -302,15 +297,7 @@ def upsert_vectors(
         int(r["vec_id"])
         for r in new_vectors.select("vec_id").distinct().collect()
     ]
-    (
-        spark.createDataFrame(
-            [(len(ids), int(batch_id))], "n_ids int, batch_id int"
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{index_path}/upserts")
-    )
+    _maint_marker(spark, index_path, len(ids), batch_id)
     rewritten = erase_rows(
         spark,
         f"{index_path}/codes",
@@ -586,15 +573,7 @@ def add_attr_column(
     # generation (refit uses -1, upserts the non-negative id count) —
     # the as-of guard keys on max(batch_id) only, so the tag is
     # diagnostic
-    (
-        spark.createDataFrame(
-            [(-2, int(batch_id))], "n_ids int, batch_id int"
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{index_path}/upserts")
-    )
+    _maint_marker(spark, index_path, -2, batch_id)
 
     tagged = values.withColumn("_present", F.lit(1))
     joined = attrs.join(tagged, "vec_id", "left")
@@ -732,17 +711,14 @@ def _cleanup_list_partitions(
 def _maint_marker(
     spark: SparkSession, index_path: str, tag: int, batch_id: int
 ) -> None:
-    """The as-of refusal marker, written FIRST by every history-
-    rewriting maintenance op (upsert -3=split, -4=merge; the guard
-    keys on max(batch_id), the tag is diagnostic)."""
-    (
-        spark.createDataFrame(
-            [(int(tag), int(batch_id))], "n_ids int, batch_id int"
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{index_path}/upserts")
+    """The as-of refusal marker in ``upserts``, written FIRST by every
+    history-rewriting op (upsert = its id count, -2=evolve, -3=split,
+    -4=merge; the guard keys on max(batch_id), the tag is
+    diagnostic)."""
+    write_generation(
+        spark.createDataFrame([(int(tag),)], "n_ids int"),
+        f"{index_path}/upserts",
+        batch_id,
     )
 
 

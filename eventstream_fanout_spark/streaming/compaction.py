@@ -55,6 +55,34 @@ def read_store_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     return spark.read.parquet(path)
 
 
+def write_generation(
+    df: DataFrame, path: str, batch_id: int, *partition_cols: str
+) -> None:
+    """Write ``df`` as generation ``batch_id`` of the path-backed store
+    at ``path``: ``path/batch_id=N[/<partition_cols>=..]``, dynamic
+    partition overwrite, so a replayed id replaces only its own
+    partition, and an empty ``df`` commits no data file (the
+    file-bearing ⇔ row-bearing rule :func:`partition_batch_ids_path`
+    relies on — writing to ``path/batch_id=N`` directly would leave an
+    empty part file instead).
+
+    The id rides as a STRING literal.  Whole-stage codegen inlines an
+    int/long literal into the generated Java source, so every new
+    batch id compiled fresh classes for the whole write stage; a
+    string literal is passed by reference, so every trigger reuses the
+    same classes.  The directory name is the same ``batch_id=N``, and
+    partition inference reads it back as int (negative frozen ids
+    included).  Catalog-table stores keep their typed column: the
+    metastore records the partition column's type."""
+    (
+        df.withColumn("batch_id", F.lit(str(int(batch_id))))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id", *partition_cols)
+        .parquet(path)
+    )
+
+
 def partition_batch_ids_path(spark: SparkSession, path: str) -> list[int]:
     """``batch_id`` partition census of a path-backed store from the
     DIRECTORY LISTING (namenode RPCs only — zero Spark jobs; r15,
@@ -128,14 +156,7 @@ def compact_generations(
     folded = df.where(F.col("batch_id").isin(fold_ids)).select(*data_cols)
     if dedup_cols:
         folded = folded.dropDuplicates(dedup_cols)
-    part_cols = ["batch_id", *(extra_partition_cols or [])]
-    (
-        folded.withColumn("batch_id", F.lit(int(next_gen)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*part_cols)
-        .parquet(path)
-    )
+    write_generation(folded, path, next_gen, *(extra_partition_cols or []))
     # sources go away only now — the new generation is durably in place
     from py4j.java_gateway import java_import
 

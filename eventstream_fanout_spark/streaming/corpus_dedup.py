@@ -43,6 +43,7 @@ from ..operators.dedup import (
     banded_signatures,
     minhash_signatures,
 )
+from .compaction import write_generation
 
 
 def batch_bands(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -183,14 +184,8 @@ def append_accepted(
             accepted.select("doc_id").distinct(), "doc_id", "left_semi"
         )
     )
-    out = src.select("doc_id", "band", "bh").withColumn(
-        "batch_id", F.lit(int(batch_id))
-    )
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store_path)
+    write_generation(
+        src.select("doc_id", "band", "bh"), store_path, batch_id
     )
 
 
@@ -431,13 +426,7 @@ def streaming_dedup_sink(
                 )
             survivors = survivors.persist()
             try:
-                (
-                    survivors.withColumn("batch_id", F.lit(int(batch_id)))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(out_path)
-                )
+                write_generation(survivors, out_path, batch_id)
                 append_accepted(survivors, store_path, batch_id, bands=bands)
             finally:
                 survivors.unpersist()
@@ -534,13 +523,7 @@ def streaming_dedup_sink_bucketed(
                 )
             survivors = survivors.persist()
             try:
-                (
-                    survivors.withColumn("batch_id", F.lit(int(batch_id)))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(out_path)
-                )
+                write_generation(survivors, out_path, batch_id)
                 surv_bands = _with_band_key(
                     bands.join(
                         survivors.select("doc_id").distinct(),
@@ -652,14 +635,12 @@ def compact_store(
         return 0  # nothing but (at most) one frozen generation
     next_gen = min([b for b in bids if b < 0], default=0) - 1
     folded = df.where(F.col("batch_id").isin(fold_ids))
-    (
-        folded.select("doc_id", "band", "bh")
-        .withColumn("batch_id", F.lit(int(next_gen)))
-        .coalesce(max(1, len(fold_ids) // 8))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store_path)
+    write_generation(
+        folded.select("doc_id", "band", "bh").coalesce(
+            max(1, len(fold_ids) // 8)
+        ),
+        store_path,
+        next_gen,
     )
     # sources go away only now — the new generation is durably in place
     from py4j.java_gateway import java_import

@@ -25,6 +25,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .compaction import write_generation
+
 Sink = Callable[[DataFrame, int], None]
 
 
@@ -39,7 +41,6 @@ class FanoutSink:
 def parquet_sink(
     path: str,
     partition_by: tuple[str, ...] = (),
-    mode: str = "overwrite",
     project: Callable[[DataFrame], DataFrame] | None = None,
 ) -> FanoutSink:
     """Warehouse sink (reference K2, ClickHouse stand-in): executor-side
@@ -57,11 +58,7 @@ def parquet_sink(
     def write(df: DataFrame, batch_id: int) -> None:
         if project is not None:
             df = project(df)
-        out = df.withColumn("batch_id", F.lit(batch_id))
-        writer = out.write.mode(mode).option(
-            "partitionOverwriteMode", "dynamic"
-        )
-        writer.partitionBy("batch_id", *partition_by).parquet(path)
+        write_generation(df, path, batch_id, *partition_by)
 
     return FanoutSink("warehouse", write)
 

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.classify import token_weight_classify
+from .compaction import write_generation
 
 
 def save_token_model(
@@ -129,26 +130,17 @@ def streaming_scoring_sink(
                 .collect()[0][0]
             )
             gen = int(latest)
-            (
-                spark.range(1)
-                .select(
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                    F.lit(gen).cast("int").alias("gen"),
-                )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{out_path}/markers")
+            write_generation(
+                spark.range(1).select(F.lit(gen).cast("int").alias("gen")),
+                f"{out_path}/markers",
+                batch_id,
             )
         weights, priors = load_token_model(spark, model_path, generation=gen)
         preds = token_weight_classify(batch_df, weights, priors, class_col)
-        (
-            preds.withColumn("gen", F.lit(gen).cast("int"))
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{out_path}/preds")
+        write_generation(
+            preds.withColumn("gen", F.lit(gen).cast("int")),
+            f"{out_path}/preds",
+            batch_id,
         )
 
     return sink

@@ -61,7 +61,7 @@ def json_file_stream(
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(path).withColumnRenamed("value", "value")
+    return reader.load(path)
 
 
 def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:

@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.text_index import batch_stats, doc_postings
+from .compaction import write_generation
 
 
 def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
@@ -102,13 +103,7 @@ def streaming_text_index_sink(
         # each of the 4-5 generation writes re-ran the explode→tf→dl
         # tree over the batch.
         postings, _dl = doc_postings(batch_df.select("doc_id", "text"))
-        (
-            postings.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{index_path}/postings")
-        )
+        write_generation(postings, f"{index_path}/postings", batch_id)
         # The read-back is SCHEMA-SPECIFIED (r15 — the vector-dedup
         # sink's SPARK-23271 lesson): a first-ever batch of all-empty
         # texts commits NO data file under dynamic overwrite, so
@@ -176,13 +171,7 @@ def streaming_text_index_sink(
                 rel = rel.observe(
                     stats_obs, F.sum("n_docs").alias("n")
                 )
-            (
-                rel.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{index_path}/{name}")
-            )
+            write_generation(rel, f"{index_path}/{name}", batch_id)
         # the generation's id bloom (round 11 — the uniqueness gate's
         # metadata-sized side).  Written AFTER stats: a crash before
         # it leaves the generation bloom-less, which the gate detects
@@ -734,13 +723,7 @@ def _apply_erasure(
             (correction, "stats"),
             (tomb_rows, "tombstones"),  # commit marker LAST
         ):
-            (
-                rel.withColumn("batch_id", F.lit(int(gen)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{index_path}/{name}")
-            )
+            write_generation(rel, f"{index_path}/{name}", gen)
     touched = [(int(g),) for g in sorted({r["batch_id"] for r in drows})]
     if not touched:
         return 0  # nothing stored anywhere — nothing to rewrite
@@ -971,13 +954,7 @@ def upsert_docs(
         markers = spark.createDataFrame(
             [(i,) for i in marked], "doc_id bigint"
         )
-        (
-            markers.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{index_path}/tombstones")
-        )
+        write_generation(markers, f"{index_path}/tombstones", batch_id)
     return rewritten
 
 
@@ -1168,15 +1145,10 @@ def add_doc_attr_column(
         )
 
     # marker FIRST (see docstring)
-    (
-        spark.createDataFrame(
-            [(len(new_cols), int(batch_id))],
-            "n_cols int, batch_id int",
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{index_path}/attr_evolutions")
+    write_generation(
+        spark.createDataFrame([(len(new_cols),)], "n_cols int"),
+        f"{index_path}/attr_evolutions",
+        batch_id,
     )
 
     tagged = values.withColumn("_present", F.lit(1))

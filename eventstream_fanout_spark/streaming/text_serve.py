@@ -25,9 +25,9 @@ adversarial query can make a trigger's probe corpus-length.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..operators.text_index import bm25_batch_topk
+from .compaction import write_generation
 
 
 def streaming_bm25_probe_sink(
@@ -54,12 +54,6 @@ def streaming_bm25_probe_sink(
             k,
             max_df_frac=max_df_frac,
         )
-        (
-            topk.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
+        write_generation(topk, out_path, batch_id)
 
     return process

@@ -48,6 +48,7 @@ from ..operators.ann_index import (
     pq_subspaces,
 )
 from .ann_ingest import _read_artifact_or_raise
+from .compaction import write_generation
 from .corpus_dedup import _read_store_or_none
 
 
@@ -191,13 +192,7 @@ def streaming_vector_dedup_sink(
             batch_df, store, codebook, centroids, max_adc_dist,
             nprobe=nprobe,
         )
-        (
-            survivors.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
+        write_generation(survivors, out_path, batch_id)
         # codes derive from the just-written survivors partition (the
         # graph/text read-back discipline, r14): PQ encoding is a pure
         # per-vector function, so re-encoding the admitted rows equals
@@ -222,13 +217,11 @@ def streaming_vector_dedup_sink(
             .where(F.col("batch_id") == int(batch_id))
             .select("vec_id", "embedding")
         )
-        (
-            encode_pq_codes(admitted, codebook, centroids)
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "list_id")
-            .parquet(f"{index_path}/codes")
+        write_generation(
+            encode_pq_codes(admitted, codebook, centroids),
+            f"{index_path}/codes",
+            batch_id,
+            "list_id",
         )
 
     return process
